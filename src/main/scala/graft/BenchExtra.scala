@@ -168,8 +168,8 @@ object BenchExtra {
           "SELECT explode(eg_decode(eg_encode(vals, 3, 'i64'), 3, 'i64')) AS v " +
           "FROM (SELECT collect_list(l_suppkey) AS vals FROM lineitem_v GROUP BY l_orderkey % 32)")
       case "v2write" =>
-        // attribute the arranged SQL write's analysis-time jobs: url count,
-        // boundary sample, and the full write (guide §1: measure first)
+        // attribute the arranged SQL write's analysis-time job (the one-pass
+        // url count + boundary sample) against the full write
         import org.apache.spark.sql.functions.col
         import spark.implicits._
         val rounds = if (args.length > 1) args(1).toInt else 3
@@ -180,11 +180,8 @@ object BenchExtra {
         val src = spark.read.parquet(pagesParquet)
         for (r <- 0 until rounds) {
           var t0 = System.nanoTime()
-          val total = src.select(col("url").as("url")).as[String].count()
-          val countS = (System.nanoTime() - t0) / 1e9
-          t0 = System.nanoTime()
-          val b = jobs.EncodeJob.computeUrlBoundaries(
-            src.select(col("url").as("url")).as[String], 128, knownTotal = Some(total))
+          val (_, _, b) = jobs.EncodeJob.countAndUrlBoundaries(
+            src.select(col("url").as("url")).as[String], _ => 128)
           val sampleS = (System.nanoTime() - t0) / 1e9
           val wStore = java.nio.file.Files.createTempDirectory(
             java.nio.file.Paths.get("/dev/shm"), "graft-w-").toString
@@ -194,7 +191,7 @@ object BenchExtra {
           finally spark.conf.unset("spark.graft.write.partitions")
           val writeS = (System.nanoTime() - t0) / 1e9
           jobs.LocalSession.deleteRecursively(new java.io.File(wStore))
-          println(f"v2write round $r: count=$countS%.3f sample=$sampleS%.3f (boundaries=${b.length}) write=$writeS%.3f")
+          println(f"v2write round $r: count+sample=$sampleS%.3f (boundaries=${b.length}) write=$writeS%.3f")
         }
       case "v2scan" =>
         // row-path vs columnar-path V2 full scan A/B on a bench-shaped store

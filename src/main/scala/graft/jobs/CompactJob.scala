@@ -1,6 +1,7 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.sources.SnapshotStore
 
@@ -22,8 +23,8 @@ import graft.sources.SnapshotStore
  *  - Resume/exactly-once: compacted parts get ids in a NEGATIVE namespace (below
  *    every batch/wave id, which are always >= 0), so a replayed streaming batch
  *    can never collide with a compacted part in the manifest anti-join.
- *  - Bounded memory: the rewrite is the standard shuffle-once encode pipeline —
- *    no per-part driver materialization.
+ *  - Bounded memory: the rewrite is the standard shuffle-once encode pipeline
+ *    ([[EncodeJob.stageEncode]]) — no per-part driver materialization.
  */
 object CompactJob {
 
@@ -54,13 +55,11 @@ object CompactJob {
     // re-read could race a concurrent commit — see DecodeJob.decodePartsOf)
     val pages = DecodeJob.decodePartsOf(spark, root, entries, smallIds)
     // fresh boundaries for the compacted subset; the store-level BOUNDARIES file
-    // (the batch job's work-unit definition) is deliberately left untouched.
-    // totalRows comes from the manifest: pages is a full DECODE, so the
-    // boundary sampler's count() fallback would decompress everything once
-    // more for a number the manifest already has
-    val boundaries = EncodeJob.computeBoundaries(pages, newParts, Some(totalRows))
+    // (the batch job's work-unit definition) is deliberately left untouched
+    val (_, _, boundaries) = EncodeJob.countAndUrlBoundaries(
+      pages.select(col("url")).as(Encoders.STRING), _ => newParts)
     val prepared = EncodeJob.withPartIds(pages.toDF(), boundaries, base)
-    val (_, newEntries, _) = EncodeJob.stageEncode(spark, prepared, newParts, root)
+    val (newEntries, _) = EncodeJob.stageEncode(spark, prepared, base, newParts, root)
 
     // rowsRehomed: this commit's parts carry only rows earlier snapshots
     // already delivered — the streaming reader must skip it

@@ -1,9 +1,9 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Column, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{SnapshotStore, WebPage}
+import graft.sources.SnapshotStore
 
 /**
  * Copy-on-write DELETE (Iceberg-style): `DELETE FROM` on the graft table
@@ -59,26 +59,16 @@ object DeleteJob {
     val survivors = DecodeJob.decodePartsOf(spark, root, entries, affectedIds)
       .toDF()
       .where(!coalesce(cond, lit(false)))
-      .as(Encoders.product[WebPage])
 
-    // all-deleted fast path: an empty re-encode would stage a zero-file dir
-    // the metrics read-back cannot infer a schema from — commit the removal
-    // directly (isEmpty stops at the first surviving row; only the rare
-    // everything-matched case pays a full scan of the affected parts)
-    if (survivors.isEmpty) {
-      val snap = SnapshotStore.commitReplacing(root, Seq.empty, affectedSet,
-        rowsRehomed = true)
-      return DeleteResult(snap, affectedIds.size, 0, affectedRows, 0L)
-    }
-
-    // re-encode the survivors (CompactJob's shape): affectedRows is a cheap
-    // manifest-derived UPPER bound for the sampler — an exact survivor count
-    // would cost one extra full decode+filter pass
-    val newParts = math.max(1L, (affectedRows + EncodeJob.BlockSize - 1) / EncodeJob.BlockSize).toInt
+    // re-encode the survivors (CompactJob's shape): the sampler's exact
+    // survivor count sizes the rewrite. A delete that matched every row stages
+    // nothing, and the commit below only removes the affected parts
+    val (_, newParts, boundaries) = EncodeJob.countAndUrlBoundaries(
+      survivors.select($"url").as[String],
+      n => math.max(1L, (n + EncodeJob.BlockSize - 1) / EncodeJob.BlockSize).toInt)
     val base = SnapshotStore.nextRehomeBase(root, newParts)
-    val boundaries = EncodeJob.computeBoundaries(survivors, newParts, Some(affectedRows))
-    val prepared = EncodeJob.withPartIds(survivors.toDF(), boundaries, base)
-    val (_, newEntries, _) = EncodeJob.stageEncode(spark, prepared, newParts, root)
+    val prepared = EncodeJob.withPartIds(survivors, boundaries, base)
+    val (newEntries, _) = EncodeJob.stageEncode(spark, prepared, base, newParts, root)
 
     val snap = SnapshotStore.commitReplacing(root, newEntries, affectedSet,
       rowsRehomed = true)

@@ -1,14 +1,22 @@
 package graft.jobs
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.codec.{IntBlockCodec, StringBlockCodec}
 import graft.core.PhysicalIntType
 import graft.sources.{SnapshotStore, WebPage, Webtext}
+import graft.sources.v2.{GraftDataSource, GraftDataWriter, GraftWriteLayout, GraftWriterCommitMessage}
 
 /**
  * One encoded block of one column of one work unit, with pruning metadata:
@@ -63,21 +71,28 @@ final case class BlockRow(
 /**
  * Columnar encode job (SURVEY.md §3.4 lifecycle):
  *
- *  1. PLAN    — read input snapshot; left-anti join against committed part manifest
- *               (resume from last checkpoint, north_rule).
- *  2. PARTITION — explicit range partitioning on `url` via deterministic sampled
- *               boundaries persisted next to the store (same work units on re-run).
- *  3. ENCODE  — `Dataset.mapPartitions` kernel: per column slice, stats → codec
- *               auto-choice → self-describing block rows. Single pass, bounded
- *               memory (64Ki rows per block).
- *  4. COMMIT  — stage parquet to a fresh data dir, roll up per-part lineage +
- *               metrics, atomic manifest swap. Each commit is a checkpoint.
+ *  1. PLAN    — read input snapshot; keep only the wave's pending part ids
+ *               (`part_id IN (wave)` against the committed manifest: resume from
+ *               the last checkpoint, north_rule).
+ *  2. PARTITION — range buckets on `url` from deterministic sampled boundaries
+ *               persisted next to the store (same work units on re-run); a
+ *               pass-through exchange (`repartitionById`) puts exactly part
+ *               `lo + i` in shuffle partition `i`, sorted by url.
+ *  3. ENCODE  — each task runs the V2 writer's kernel ([[BlockBuffer]] inside a
+ *               [[graft.sources.v2.GraftDataWriter]]): per column slice, stats →
+ *               codec auto-choice → self-describing block rows in the task's own
+ *               parquet file, plus the part's lineage rollup (rows, bytes, codecs).
+ *  4. COMMIT  — a task promotes its file only once Spark's output-commit
+ *               coordinator authorizes the attempt; the driver sweeps unnamed
+ *               files, builds entries from the commit messages and swaps the
+ *               manifest atomically. Each commit is a checkpoint.
  *
- * Scale notes: the only wide exchange is the one repartition by part_id; encode and
- * metric rollup are map-side; the committed-parts side of the anti-join is broadcast
- * (manifest rows ≪ data). Work units are a pure function of (url, boundaries), so
- * skew in `lang`/`host` cannot skew tasks — urls are ~unique. Group-level skew is
- * handled where grouping happens (salted two-phase rollups in metrics queries).
+ * Scale notes: the only wide exchange is the pass-through one on the range
+ * bucket, so one task holds one contiguous url range (no hash-collision skew);
+ * encode and metric rollup run inside that task, with no job after the write.
+ * Work units are a pure function of (url, boundaries), so skew in `lang`/`host`
+ * cannot skew tasks — urls are ~unique. Group-level skew is handled where
+ * grouping happens (salted two-phase rollups in metrics queries).
  */
 object EncodeJob {
 
@@ -94,47 +109,32 @@ object EncodeJob {
   // ---------------- range boundaries (deterministic, persisted) ----------------
 
   /**
-   * Deterministic sample of urls -> parts-1 sorted boundary strings.
-   * The sampling rate adapts to the row count (parquet count() is metadata-only, so
-   * this costs no data scan) and the sample is a pure hash filter — unbiased across
-   * the whole input, unlike limit(), which would only see the first files read and
-   * skew every boundary at scale.
-   */
-  def computeBoundaries(pages: Dataset[WebPage], parts: Int,
-                        knownTotal: Option[Long] = None): Array[String] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    computeUrlBoundaries(pages.select($"url").as[String], parts, knownTotal)
-  }
-
-  /**
-   * ONE-pass (row count, partition count, range boundaries) for the V2
-   * write-arrange rule (r7, closing the r6 verdict item: the separate
-   * `count()` job computed the write's child a second time — for a child
-   * where column pruning cannot cheapen the url projection, a third full
-   * compute on top of the sample and the write itself).
+   * The one boundary sampler: ONE url-only pass yields the exact row count,
+   * the partition count and the range boundaries. Used by the batch job, the
+   * V2 write-arrange rule, compaction and the copy-on-write delete.
    *
    * Per partition: exact row count + a deterministic uniform reservoir of
-   * SAMPLEABLE urls (exclusions identical to [[computeUrlBoundaries]]: null,
-   * empty, and newline-holding urls can never become split points — they
-   * still bucket fine as data). Driver side: the caller's sizing function
-   * turns the exact total into the partition count, then boundaries are
-   * weighted quantiles over the merged reservoirs (each sampled url stands
-   * for eligible_i/|sample_i| rows — the public RangePartitioner scheme).
-   * Deterministic for a given input partitioning: the reservoir PRNG is
-   * seeded per partition index. Boundary QUALITY matches the hash-threshold
-   * sampler (~200+ candidates per split point at the default sizes); the
-   * exact split points differ, which only moves block-range edges — content,
-   * ordering guarantees, and prefix pruning are unaffected.
+   * SAMPLEABLE urls. Null, empty and newline-holding urls never become split
+   * points (they still bucket fine as data): RangeBucketId buckets null as "",
+   * a "" boundary vanishes in the persisted file's split/filter round-trip,
+   * and an embedded newline splits into two bogus boundaries — a resumed run
+   * would then re-bucket rows under a DIFFERENT layout than the one committed.
+   * Driver side: the caller's sizing function turns the exact total into the
+   * partition count, then [[weightedBoundaries]] places the split points over
+   * the merged reservoirs (each sampled url stands for eligible_i/|sample_i|
+   * rows — the public RangePartitioner scheme). Deterministic for a given
+   * input partitioning and row order: the reservoir PRNG is seeded per
+   * partition index, so an upstream whose row order varies between runs
+   * (an unsorted shuffle) can yield other boundaries. The batch job persists
+   * its boundaries, so a resume never re-samples.
    */
   def countAndUrlBoundaries(urls: Dataset[String],
                             partsFor: Long => Int): (Long, Int, Array[String]) = {
     val rdd = urls.rdd
-    // driver-collect bound (review finding): a many-thousand-partition input
-    // must not collect 4096 urls PER partition — scale the per-partition
-    // reservoir so the total candidate collect stays ~2^18 strings at any
-    // width (the old hash-threshold sampler's 200k bound, same order), with
-    // a floor so every partition still contributes weighted candidates
+    // driver-collect bound: a many-thousand-partition input must not collect
+    // 4096 urls PER partition — scale the per-partition reservoir so the total
+    // candidate collect stays ~2^18 strings at any width, with a floor so
+    // every partition still contributes weighted candidates
     val ReservoirPerPartition =
       math.max(16, math.min(4096, (1 << 18) / math.max(1, rdd.getNumPartitions)))
     val partials = rdd.mapPartitionsWithIndex { (idx, it) =>
@@ -159,95 +159,58 @@ object EncodeJob {
     }.collect()
     val total = partials.iterator.map(_._1).sum
     val parts = partsFor(total)
-    val eligibleTotal = partials.iterator.map(_._2).sum
-    if (parts <= 1 || eligibleTotal == 0) return (total, parts, Array.empty)
-    // weighted candidates, sorted by url (the same String ordering
-    // computeUrlBoundaries' `.sorted` uses, which RangeBucketId mirrors)
-    val candidates = new scala.collection.mutable.ArrayBuffer[(String, Double)](
-      partials.iterator.map(_._3.length).sum)
-    partials.foreach { case (_, elig, sample) =>
-      if (sample.nonEmpty) {
-        val w = elig.toDouble / sample.length
-        sample.foreach(u => candidates += ((u, w)))
-      }
+    val candidates = partials.toSeq.flatMap { case (_, elig, sample) =>
+      val w = elig.toDouble / math.max(1, sample.length)
+      sample.map(u => (u, w))
     }
+    (total, parts,
+      weightedBoundaries(candidates, partials.iterator.map(_._2).sum.toDouble, parts))
+  }
+
+  /**
+   * Weighted quantile split points: up to `parts - 1` strictly increasing
+   * urls, the k-th where the running weight (in url order — the String
+   * ordering RangeBucketId mirrors) first reaches k * totalWeight / parts.
+   * After a split, the target advances past the running weight, so a
+   * candidate heavier than one step (one big input partition's few samples
+   * among many tiny partitions) yields one split, not a split at each of the
+   * following candidates.
+   */
+  private[graft] def weightedBoundaries(candidates: Seq[(String, Double)],
+      totalWeight: Double, parts: Int): Array[String] = {
+    if (parts <= 1 || totalWeight <= 0.0) return Array.empty
     val sorted = candidates.sortBy(_._1)
-    val step = eligibleTotal.toDouble / parts
+    val step = totalWeight / parts
     val bounds = new scala.collection.mutable.ArrayBuffer[String](parts - 1)
     var cum = 0.0
     var target = step
+    var k = 1 // index of the split point `target` stands for
     var last: String = null
     var i = 0
-    while (i < sorted.length && bounds.length < parts - 1) {
+    while (i < sorted.length && k < parts) {
       cum += sorted(i)._2
       if (cum >= target) {
         val u = sorted(i)._1
         if (last == null || u.compareTo(last) > 0) { bounds += u; last = u }
-        target += step
+        while (k < parts && target <= cum) { target += step; k += 1 }
       }
       i += 1
     }
-    (total, parts, bounds.toArray)
-  }
-
-  /** Boundary computation over a bare url column — shared by the batch job
-    * (above) and the V2 write-arrange rule ([[graft.plans.GraftWriteArrangeRule]]),
-    * whose input is an arbitrary resolved query, not a WebPage dataset. */
-  def computeUrlBoundaries(urlsCol: Dataset[String], parts: Int,
-                           knownTotal: Option[Long] = None): Array[String] = {
-    if (parts <= 1) return Array.empty
-    val spark = urlsCol.sparkSession
-    import spark.implicits._
-    val targetSample = math.min(parts * 200L, 200000L)
-    // knownTotal skips the count() pass — for PARQUET inputs count is
-    // metadata-only, but compaction's input is a full decode, where an extra
-    // count() decompresses every block again
-    val total = math.max(knownTotal.getOrElse(urlsCol.count()), 1L)
-    val rateDenom = 1000000L
-    val threshold = math.min((targetSample * rateDenom) / total + 1, rateDenom)
-    // null urls are excluded from the SAMPLE only: a null can never be a split
-    // point (RangeBucketId buckets null as "", i.e. always part 0), and
-    // xxhash64(null)'s sampling behavior would otherwise decide whether this
-    // sort NPEs — stores with null urls were un-encodable depending on which
-    // rows the hash picked
-    // empty and newline-holding urls are excluded from the SAMPLE only (they
-    // still bucket fine as data): a "" boundary vanishes in the persisted
-    // file's split/filter round-trip and an embedded newline splits into two
-    // bogus boundaries — a resumed run would re-bucket rows under a DIFFERENT
-    // layout than the one committed, which the anti-join then turns into
-    // silently dropped or duplicated rows. Any sampled url is just a split
-    // point, so narrowing the sample never hurts correctness.
-    val urls = urlsCol
-      .where($"url".isNotNull && $"url" =!= "" && !$"url".contains("\n") &&
-        pmod(xxhash64($"url"), lit(rateDenom)) < lit(threshold))
-      .collect().sorted
-    if (urls.isEmpty) Array.empty
-    else Array.tabulate(parts - 1) { i =>
-      urls(((i + 1).toLong * urls.length / parts).toInt.min(urls.length - 1))
-    }.distinct
+    bounds.toArray
   }
 
   def loadOrCreateBoundaries(root: String, pages: Dataset[WebPage], parts: Int,
                              boundariesFile: String = "BOUNDARIES"): Array[String] = {
     val p = Paths.get(root, boundariesFile)
-    if (Files.exists(p)) {
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty)
-    } else {
-      // r7: ONE url-only pass (count folded into the reservoir sample) — the
-      // previous computeBoundaries ran a count() job AND a sample job over the
-      // input before the encode itself, a fixed per-run cost at every
-      // parallelism level. Resume determinism is unchanged: boundaries are
-      // persisted below and re-read, never recomputed.
-      val spark = pages.sparkSession
-      import spark.implicits._
-      val (_, _, bs) = countAndUrlBoundaries(pages.select($"url").as[String], _ => parts)
+    if (!Files.exists(p)) {
+      // persisted, then re-read on every resume: boundaries are never recomputed
+      val (_, _, bs) = countAndUrlBoundaries(
+        pages.select(col("url")).as(Encoders.STRING), _ => parts)
       SnapshotStore.writeSidecar(root, boundariesFile, bs.mkString("\n"))
-      // return what a RESUMED run will parse back, not the in-memory array:
-      // create and resume must bucket identically or the resume anti-join
-      // drops/duplicates rows (the sample filter above makes the round-trip
-      // lossless; this is belt and braces against future boundary sources)
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty)
     }
+    // return what a RESUMED run parses back, not the in-memory array: create
+    // and resume must bucket identically or the resume drops/duplicates rows
+    new String(Files.readAllBytes(p), StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty)
   }
 
   /** part_id = range bucket of url (pure function of url + persisted boundaries).
@@ -368,74 +331,29 @@ object EncodeJob {
       None, None, None, None, n.toLong * (t.width / 8), enc.length.toLong, enc)
   }
 
-  /** Encode one buffered block (all 5 webtext columns) into BlockRows.
-    * `private[graft]`: the V2 write path runs the same kernel push-style
-    * inside each DataWriter task. */
-  private[graft] def flushBlock(partId: Int, seq: Int,
-      urls: java.util.ArrayList[Array[Byte]],
-      ts: Array[Long], tsValid: Array[Boolean], tsN: Int,
-      htmls: java.util.ArrayList[Array[Byte]],
-      texts: java.util.ArrayList[Array[Byte]],
-      langs: java.util.ArrayList[Array[Byte]]): Seq[BlockRow] =
-    Seq(
-      strBlockRow(partId, seq, "url", urls, textual = true),
-      intBlockRow(partId, seq, "warc_ts", ts, tsValid, tsN, PhysicalIntType.I64),
-      strBlockRow(partId, seq, "html", htmls, textual = false),
-      strBlockRow(partId, seq, "text", texts, textual = true),
-      strBlockRow(partId, seq, "lang", langs, textual = true))
-
-  /** Kernel row: raw UTF-8 bytes and epoch micros (+ validity for null warc_ts) —
-    * no Timestamp, no String re-materialization (UTF8String -> String -> getBytes
-    * showed up hot). Null byte arrays stay null end-to-end (null != ""). */
+  /** Kernel row: raw UTF-8 bytes and epoch micros (+ validity for null warc_ts).
+    * Null byte arrays stay null end-to-end (null != ""). */
   type EncRow = (Int, Array[Byte], Long, Boolean, Array[Byte], Array[Byte], Array[Byte])
 
-  /** The mapPartitions kernel: rows arrive sorted by (part_id, url). */
+  /** [[BlockBuffer]] over in-memory webtext rows sorted by (part_id, url): the
+    * kernel alone, with no Spark task or file around it. */
   def encodePartition(rows: Iterator[EncRow],
                       maxBlockBytes: Long = MaxBlockBytes): Iterator[BlockRow] = new Iterator[BlockRow] {
-    private var out: Iterator[BlockRow] = Iterator.empty
-    private var curPart = -1
-    private var blockSeq = 0
-    private val urls = new java.util.ArrayList[Array[Byte]](BlockSize)
-    private val htmls = new java.util.ArrayList[Array[Byte]](BlockSize)
-    private val texts = new java.util.ArrayList[Array[Byte]](BlockSize)
-    private val langs = new java.util.ArrayList[Array[Byte]](BlockSize)
-    private val ts = new Array[Long](BlockSize)
-    private val tsValid = new Array[Boolean](BlockSize)
-    private var n = 0
-    private var bufBytes = 0L
-
-    @inline private def lenOf(bs: Array[Byte]): Int = if (bs == null) 0 else bs.length
-
-    private def flush(): Seq[BlockRow] = {
-      if (n == 0) Seq.empty
-      else {
-        val res = flushBlock(curPart, blockSeq, urls, ts, tsValid, n, htmls, texts, langs)
-        urls.clear(); htmls.clear(); texts.clear(); langs.clear()
-        n = 0; bufBytes = 0L; blockSeq += 1
-        res
-      }
-    }
+    private val out = new java.util.ArrayDeque[BlockRow]()
+    private val blocks = new BlockBuffer(GraftDataSource.PageSchema, maxBlockBytes, out.add(_))
+    private val utf8 = org.apache.spark.unsafe.types.UTF8String.fromBytes(_: Array[Byte])
 
     override def hasNext: Boolean = {
-      while (!out.hasNext && rows.hasNext) {
+      while (out.isEmpty && rows.hasNext) {
         val (pid, url, tsUs, tsOk, html, text, lang) = rows.next()
-        var flushed: Seq[BlockRow] = Seq.empty
-        if (pid != curPart) { flushed = flush(); curPart = pid; blockSeq = 0 }
-        else if (n == BlockSize || bufBytes >= maxBlockBytes) flushed = flush()
-        urls.add(url)
-        htmls.add(html)
-        texts.add(text)
-        langs.add(lang)
-        ts(n) = tsUs
-        tsValid(n) = tsOk
-        n += 1
-        bufBytes += lenOf(url) + lenOf(html) + lenOf(text) + lenOf(lang) + 16L
-        if (flushed.nonEmpty) out = flushed.iterator
+        if (pid != blocks.partId) blocks.startPart(pid)
+        blocks.add(new GenericInternalRow(Array[Any](
+          utf8(url), if (tsOk) tsUs else null, html, utf8(text), utf8(lang))))
       }
-      if (!out.hasNext && !rows.hasNext && n > 0) out = flush().iterator
-      out.hasNext
+      if (out.isEmpty) blocks.flush()
+      !out.isEmpty
     }
-    override def next(): BlockRow = { if (!hasNext) throw new NoSuchElementException; out.next() }
+    override def next(): BlockRow = { if (!hasNext) throw new NoSuchElementException; out.poll() }
   }
 
   // ---------------- job ----------------
@@ -443,69 +361,76 @@ object EncodeJob {
   final case class RunResult(snapshotId: Long, partsEncoded: Int, nRows: Long,
       origBytes: Long, encBytes: Long, jobSecs: Double)
 
-  /** Narrow pre-shuffle projection with codegen'd range-bucket part ids: epoch
-    * micros instead of Timestamp, no case-class re-materialization — less shuffle
-    * IO and no per-row boxing (a Scala UDF here broke whole-stage codegen). */
+  /** Narrow pre-shuffle projection: codegen'd range-bucket part ids (a Scala
+    * UDF here broke whole-stage codegen) plus the store columns cast to the
+    * webtext schema — no case-class re-materialization. */
   def withPartIds(pages: DataFrame, boundaries: Array[String], offset: Int): DataFrame = {
     val partIdCol = org.apache.spark.sql.graftshim.Shim.column(
       graft.functions.RangeBucketId(
         org.apache.spark.sql.graftshim.Shim.expression(col("url")), boundaries, offset))
-    pages.select(partIdCol.as("part_id"), col("url"),
-      coalesce(unix_micros(col("warc_ts").cast("timestamp")), lit(0L)).as("ts_us"),
-      col("warc_ts").isNotNull.as("ts_valid"),
-      col("html"), col("text"), col("lang"))
+    pages.select(partIdCol.as("part_id") +: GraftDataSource.PageSchema.fields.toSeq
+      .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
   }
 
   /**
-   * Shuffle-once encode of a prepared narrow frame (part_id, url, ts_us, ts_valid,
-   * html, text, lang) into a fresh STAGED data dir plus per-part lineage entries —
-   * no commit; callers commit (append for waves, replace for compaction).
-   * Returns (relative data dir, entries, seconds in the distributed write).
+   * Shuffle-once encode of a [[withPartIds]] frame whose part ids all lie in
+   * [lo, lo + width) into a fresh STAGED data dir — no commit; callers commit
+   * (append for waves, replace for compaction and delete). The pass-through
+   * exchange puts part `lo + i` alone in partition `i`; each non-empty task
+   * runs one [[GraftDataWriter]] and returns its commit message, which already
+   * carries the part's lineage rollup. An input with no rows stages nothing
+   * and leaves no dir. Returns (entries, seconds in the distributed write).
    */
-  def stageEncode(spark: SparkSession, prepared: DataFrame, numParts: Int,
+  def stageEncode(spark: SparkSession, prepared: DataFrame, lo: Int, width: Int,
                   root: String,
-                  maxBlockBytes: Long = MaxBlockBytes): (String, Seq[SnapshotStore.PartEntry], Double) = {
-    import spark.implicits._
-    // one exchange: co-locate each work unit, order inside for block locality
-    val blocks = prepared
-      .repartition(math.max(numParts, 1), $"part_id")
-      .sortWithinPartitions($"part_id", $"url")
-      .select(col("part_id"), col("url").cast("binary").as("url"), col("ts_us"),
-        col("ts_valid"), col("html"), col("text").cast("binary").as("text"),
-        col("lang").cast("binary").as("lang"))
-      .as[EncRow]
-      .mapPartitions(it => encodePartition(it, maxBlockBytes))
-
+                  maxBlockBytes: Long = MaxBlockBytes): (Seq[SnapshotStore.PartEntry], Double) = {
+    val arranged = prepared
+      .repartitionById(width, col("part_id") - lit(lo))
+      .sortWithinPartitions(col("url"))
+      .select(GraftDataSource.PageSchema.fieldNames.toSeq.map(col): _*)
     val (relDir, absDir) = SnapshotStore.newDataDir(root)
-    val jt0 = System.nanoTime()
-    // the dominant column is `encoded` — already codec-compressed, high-entropy
-    // bytes; running snappy over it again costs CPU in every task for ~0 size win
-    blocks.write.mode(SaveMode.Overwrite)
-      .option("compression", "uncompressed").parquet(absDir)
-    val secs = (System.nanoTime() - jt0) / 1e9
+    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    val t0 = System.nanoTime()
+    val msgs =
+      try {
+        val rdd = arranged.queryExecution.toRdd
+        // partition index IS the part id: a resized exchange would mislabel
+        // blocks (adaptive execution drops an EMPTY exchange to 0 partitions)
+        require(rdd.getNumPartitions == width || rdd.getNumPartitions == 0,
+          s"encode exchange has ${rdd.getNumPartitions} partitions, expected $width")
+        rdd.mapPartitionsWithIndex { (i, rows) =>
+          if (!rows.hasNext) Iterator.empty
+          else Iterator.single(encodeTask(absDir, lo + i, i, conf, maxBlockBytes, rows))
+        }.collect()
+      } catch {
+        case NonFatal(e) =>
+          // a still-running zombie may recreate a file mid-drop: keep the cause
+          try GraftWriteLayout.dropStaging(absDir)
+          catch { case NonFatal(d) => e.addSuppressed(d) }
+          throw e
+      }
+    val secs = (System.nanoTime() - t0) / 1e9
+    GraftWriteLayout.sweepStrays(absDir, msgs.iterator.map(_.fileName).toSet,
+      dropDirIfEmpty = true)
+    (GraftWriteLayout.entriesFrom(msgs, relDir), secs)
+  }
 
-    // lineage + metrics rollup from the staged files (no recompute, no driver
-    // loops). Two-level: first per (part_id, column) — a multi-block part can
-    // pick DIFFERENT codecs for the same column per block, so codecs must be
-    // deduped per column BEFORE map_from_entries (a duplicate map key throws
-    // DUPLICATED_MAP_KEY at runtime and would abort the wave after staging)
-    val staged = spark.read.parquet(absDir)
-    val perColumn = staged.groupBy($"part_id", $"column").agg(
-      sum($"n").as("col_n"),
-      sum($"orig_bytes").as("col_orig"),
-      sum($"enc_bytes").as("col_enc"),
-      array_join(array_sort(collect_set($"codec")), "+").as("codec"))
-    val perPart = perColumn.groupBy($"part_id").agg(
-      max(when($"column" === "url", $"col_n").otherwise(0L)).as("n_rows"),
-      sum($"col_orig").as("orig_bytes"),
-      sum($"col_enc").as("enc_bytes"),
-      to_json(map_from_entries(collect_list(struct($"column", $"codec")))).as("codecs"))
-      .collect()
-    val entries = perPart.map { r =>
-      SnapshotStore.PartEntry(r.getAs[Int]("part_id"), relDir, r.getAs[Long]("n_rows"),
-        r.getAs[Long]("orig_bytes"), r.getAs[Long]("enc_bytes"), r.getAs[String]("codecs"))
-    }.toSeq
-    (relDir, entries, secs)
+  /** One batch task: the V2 writer over one part's rows. Its file is promoted
+    * only once the output-commit coordinator authorizes this attempt (as
+    * DataWritingSparkTask does for V2 writes), so a zombie or speculative
+    * twin can never surface a second copy. */
+  private def encodeTask(absDir: String, partId: Int, partition: Int,
+      conf: SerializableConfiguration, maxBlockBytes: Long,
+      rows: Iterator[InternalRow]): GraftWriterCommitMessage = {
+    val tc = TaskContext.get()
+    val w = new GraftDataWriter(absDir, partId, partition, tc.taskAttemptId(), conf,
+      GraftDataSource.PageSchema, maxBlockBytes)
+    try {
+      rows.foreach(w.write)
+      org.apache.spark.sql.graftshim.Shim.authorizeCommit(tc)
+      w.commit()
+    } catch { case t: Throwable => w.abort(); throw t }
+    finally w.close()
   }
 
   /**
@@ -520,10 +445,9 @@ object EncodeJob {
           boundariesFile: String = "BOUNDARIES"): RunResult = {
     // part ids are Int: a streaming batchId*parts namespace past Int.MaxValue
     // would wrap NEGATIVE (colliding with the compaction namespace and earlier
-    // batches) and silently drop work in the resume anti-join — fail fast
+    // batches) and silently drop work on resume — fail fast
     require(partOffset >= 0 && partOffset + parts <= Int.MaxValue.toLong,
       s"part-id namespace [$partOffset, ${partOffset + parts}) exceeds the Int range")
-    import spark.implicits._
     Files.createDirectories(Paths.get(root))
     val boundaries = loadOrCreateBoundaries(root, pages, parts, boundariesFile)
     // a smaller `parts` than the persisted range layout would leave buckets
@@ -538,8 +462,7 @@ object EncodeJob {
 
     val withPart = withPartIds(pages.toDF(), boundaries, partOffset.toInt)
 
-    // RESUME: drop work units already committed (anti-join against the manifest —
-    // broadcast; manifest rows ≪ data at any scale). Only REACHABLE ids can
+    // RESUME: drop work units already committed. Only REACHABLE ids can
     // pend: the bucket function yields 0..boundaries.length, so when a skewed
     // sample left fewer distinct boundaries than parts-1, ids past the bucket
     // count can never produce a row — treating them as pending would re-scan
@@ -558,10 +481,9 @@ object EncodeJob {
       // the wave's group already excludes committed ids; a CONCURRENT writer
       // racing the same ids is refused loudly by commitReplacing's uniqueness
       // guard at commit time (a re-filter here would hide the race silently)
-      val pending = withPart
-        .join(broadcast(group.toDF("part_id")), Seq("part_id"), "left_semi")
-
-      val (_, entries, secs) = stageEncode(spark, pending, group.size, root, maxBlockBytes)
+      val pending = withPart.where(col("part_id").isin(group: _*))
+      val (entries, secs) = stageEncode(spark, pending, group.head,
+        group.last - group.head + 1, root, maxBlockBytes)
       jobSecs += secs
       // a wave of genuinely empty ranges stages nothing: committing would bump
       // an identical empty snapshot per call (manifest churn, never converges)
@@ -583,5 +505,104 @@ object EncodeJob {
     val res = run(spark, Webtext.generate(spark, n, parts), root, parts, waves)
     println(s"encoded: $res ratio=${res.origBytes.toDouble / math.max(res.encBytes, 1)}")
     spark.stop()
+  }
+}
+
+/**
+ * The block-buffering kernel every write path shares: the batch job's tasks
+ * and the V2 writer (both through [[GraftDataWriter]]) and
+ * [[EncodeJob.encodePartition]]. Rows, in `schema`'s column order, buffer into
+ * one block that flushes at [[EncodeJob.BlockSize]] rows or `maxBlockBytes`
+ * bytes, whichever comes first; a flushed block is encoded column by column
+ * and handed to `emit`. Memory is one block in flight. Columns are
+ * schema-driven: strings get textual bounds/dict metadata, binary is opaque,
+ * timestamps ride as epoch micros, and the integer family encodes through the
+ * width-matched physical codec (i64/i32/i16/i8).
+ */
+private[graft] final class BlockBuffer(schema: StructType, maxBlockBytes: Long,
+    emit: BlockRow => Unit) {
+  import EncodeJob.BlockSize
+
+  private val fields = schema.fields
+  // per field: a byte-array buffer (string/binary) OR a long+valid buffer (ints)
+  private val strBufs = new Array[java.util.ArrayList[Array[Byte]]](fields.length)
+  private val textual = new Array[Boolean](fields.length)
+  private val longBufs = new Array[Array[Long]](fields.length)
+  private val validBufs = new Array[Array[Boolean]](fields.length)
+  private val intKind = new Array[PhysicalIntType](fields.length)
+  fields.zipWithIndex.foreach { case (f, i) =>
+    def ints(t: PhysicalIntType): Unit = {
+      longBufs(i) = new Array[Long](BlockSize); validBufs(i) = new Array[Boolean](BlockSize)
+      intKind(i) = t
+    }
+    f.dataType match {
+      case StringType =>
+        strBufs(i) = new java.util.ArrayList[Array[Byte]](BlockSize); textual(i) = true
+      case BinaryType => strBufs(i) = new java.util.ArrayList[Array[Byte]](BlockSize)
+      case TimestampType | LongType => ints(PhysicalIntType.I64)
+      case IntegerType => ints(PhysicalIntType.I32)
+      case ShortType => ints(PhysicalIntType.I16)
+      case ByteType => ints(PhysicalIntType.I8)
+      case other => throw new IllegalArgumentException(
+        s"unsupported graft column type ${f.name} ${other.simpleString}")
+    }
+  }
+  private var part = -1
+  private var blockSeq = 0
+  private var n = 0
+  private var bufBytes = 0L
+
+  def partId: Int = part
+
+  /** Rows in the open block. */
+  def buffered: Int = n
+
+  /** Flush the open block, then number blocks of part `pid` from 0. */
+  def startPart(pid: Int): Unit = { flush(); part = pid; blockSeq = 0 }
+
+  def add(row: InternalRow): Unit = {
+    var i = 0
+    while (i < fields.length) {
+      if (strBufs(i) != null) {
+        val v =
+          if (row.isNullAt(i)) null
+          else if (textual(i)) row.getUTF8String(i).getBytes
+          else row.getBinary(i)
+        strBufs(i).add(v)
+        if (v != null) bufBytes += v.length
+      } else {
+        if (row.isNullAt(i)) { longBufs(i)(n) = 0L; validBufs(i)(n) = false }
+        else {
+          longBufs(i)(n) = fields(i).dataType match {
+            case IntegerType => row.getInt(i).toLong
+            case ShortType => row.getShort(i).toLong
+            case ByteType => row.getByte(i).toLong
+            case _ => row.getLong(i) // timestamp micros / bigint
+          }
+          validBufs(i)(n) = true
+        }
+        bufBytes += 8L
+      }
+      i += 1
+    }
+    n += 1
+    bufBytes += 8L
+    if (n == BlockSize || bufBytes >= maxBlockBytes) flush()
+  }
+
+  def flush(): Unit = {
+    if (n == 0) return
+    var i = 0
+    while (i < fields.length) {
+      emit(
+        if (strBufs(i) != null)
+          EncodeJob.strBlockRow(part, blockSeq, fields(i).name, strBufs(i), textual(i))
+        else
+          EncodeJob.intBlockRow(part, blockSeq, fields(i).name,
+            longBufs(i), validBufs(i), n, intKind(i)))
+      if (strBufs(i) != null) strBufs(i).clear()
+      i += 1
+    }
+    n = 0; bufBytes = 0L; blockSeq += 1
   }
 }

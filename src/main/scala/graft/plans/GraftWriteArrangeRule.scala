@@ -23,15 +23,14 @@ import org.apache.spark.sql.types.StringType
  *
  * The arranged plan is the batch job's, expressed over the write's child:
  *
- *  1. one url-ONLY boundary-sample job ([[graft.jobs.EncodeJob.computeUrlBoundaries]]
- *     — column-pruned through the child query, so it reads ~the url bytes, not
- *     the full rows);
+ *  1. one url-ONLY count + boundary-sample job
+ *     ([[graft.jobs.EncodeJob.countAndUrlBoundaries]] — column-pruned through
+ *     the child query, so it reads ~the url bytes, not the full rows);
  *  2. a pass-through exchange — `DirectShufflePartitionID(RangeBucketId(url))`
  *     makes the partition id BE the bucket id, so each task owns exactly one
- *     contiguous url range (the batch job's layout, minus even its
- *     hash-collision task skew);
+ *     contiguous url range (the batch job's `repartitionById` layout);
  *  3. an in-partition sort on url — identical to the job's
- *     `sortWithinPartitions(part_id, url)` since a task holds one bucket.
+ *     `sortWithinPartitions(url)`, since in both a task holds one bucket.
  *
  * The rewritten command carries `graft.internal.arranged=true` in its write
  * options; [[graft.sources.v2.GraftWriteBuilder]] then skips the distribution/
@@ -53,9 +52,8 @@ import org.apache.spark.sql.types.StringType
  * degrades safely: any sampling failure logs and leaves the command unchanged
  * (ordered-distribution path, correct but slower).
  *
- * Known cost, accepted: ONE url-only boundary pass (r7: count and sample
- * FOLDED into a single job — [[graft.jobs.EncodeJob.countAndUrlBoundaries]])
- * runs at ANALYSIS of the write command (the only hook that sees the query
+ * Known cost, accepted: ONE url-only boundary pass (count and sample in a
+ * single job) runs at ANALYSIS of the write command (the only hook that sees the query
  * plan for AppendData), so `EXPLAIN INSERT INTO <graft store> ...` pays one
  * url-column pass of the source before printing — the same job the real
  * INSERT would pay anyway, column-pruned to the sort key. Deferring it to
@@ -152,7 +150,7 @@ case class GraftWriteArrangeRule(spark: SparkSession) extends Rule[LogicalPlan] 
       val bucket = graft.functions.RangeBucketId(url, boundaries.toSeq, 0)
       // DirectShufflePartitionID: partition id IS the bucket id — one
       // contiguous url range per task (the batch job's exact layout: tight
-      // block bounds, no hash-collision task skew, no gap-spanning blocks)
+      // block bounds, no gap-spanning blocks)
       val exchanged = RepartitionByExpression(
         Seq(org.apache.spark.sql.catalyst.expressions.DirectShufflePartitionID(bucket)),
         query, Some(parts), None)

@@ -17,7 +17,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, S
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
-import graft.jobs.{BlockRow, EncodeJob}
+import graft.jobs.{BlockBuffer, BlockRow, EncodeJob}
 import graft.sources.SnapshotStore
 
 /**
@@ -26,18 +26,18 @@ import graft.sources.SnapshotStore
  * encode-and-commit pipeline as [[graft.jobs.EncodeJob]] — fully distributed,
  * with no inner Spark job:
  *
- *  - **Distribution/ordering** ([[RequiresDistributionAndOrdering]]): Spark is
- *    asked for a RANGE distribution on `url` with url-ascending order inside
- *    each partition — the V2 equivalent of the batch job's explicit sampled
- *    boundaries + sortWithinPartitions. Blocks therefore carry tight
+ *  - **Distribution/ordering**: [[graft.plans.GraftWriteArrangeRule]] injects
+ *    the batch job's pass-through exchange on the url range bucket plus a url
+ *    sort; without it ([[RequiresDistributionAndOrdering]]) Spark is asked for
+ *    a RANGE distribution on the sort key. Either way blocks carry tight
  *    url min/max metadata, so the prefix/range pruning the read paths rely on
  *    works identically on SQL-written data.
- *  - **Each task IS an encode kernel**: the partition's rows stream through the
- *    same per-block buffering and [[EncodeJob.flushBlock]] codec auto-selection,
- *    and the task writes its own block parquet file (same schema as the batch
- *    writer's, one file per task) straight into a staged data dir. Commit
- *    messages carry the per-part lineage rollup (rows, orig/enc bytes, per-
- *    column codecs) computed in-task — no post-write metrics job.
+ *  - **Each task IS an encode kernel**: [[GraftDataWriter]] — the writer every
+ *    batch-job task runs too — streams the partition's rows through the shared
+ *    [[graft.jobs.BlockBuffer]] and writes its own block parquet file (one per
+ *    task) straight into a staged data dir. Commit messages carry the per-part
+ *    lineage rollup (rows, orig/enc bytes, per-column codecs) computed in-task
+ *    — no post-write metrics job.
  *  - **Exactly-once commit**: tasks stage attempt-unique files under a
  *    dot-prefixed in-progress name (invisible to all readers) and atomically
  *    rename at task commit — a zombie attempt flushing bytes after the fact
@@ -476,11 +476,11 @@ object GraftDataWriter {
   /** Test hook (single-JVM/local only): when set, exactly ONE writer task
     * throws mid-write after staging a partial file — drives the task-retry
     * abort/cleanup path deterministically. */
-  private[v2] val failNextWriteOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private[graft] val failNextWriteOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** The block-file schema, byte-compatible with what Spark writes for
-    * `Dataset[BlockRow]` in [[EncodeJob.stageEncode]] (standard 3-level lists,
-    * UTF8-annotated strings) — verified against a staged file's footer. */
+  /** The block-file schema, byte-compatible with what Spark's parquet source
+    * writes for a `Dataset[BlockRow]` (standard 3-level lists, UTF8-annotated
+    * strings), so `spark.read.parquet` reads a staged file directly. */
   private[v2] val BlockFileSchema: MessageType = MessageTypeParser.parseMessageType(
     """message spark_schema {
       |  required int32 part_id;
@@ -517,22 +517,20 @@ object GraftDataWriter {
 }
 
 /**
- * One task's encode kernel: buffers the (sort-key-ordered) partition rows into
- * bounded blocks — the same 64Ki-row / [[EncodeJob.MaxBlockBytes]] flush rule
- * as [[EncodeJob.encodePartition]], push-style — and appends each flushed
- * block's column rows to this task's own parquet file. Memory is one block
- * in flight; the file is attempt-unique so speculative twins cannot collide.
- * Columns are SCHEMA-DRIVEN: strings get textual bounds/dict metadata, binary
- * is opaque, timestamps ride as epoch micros, and the integer family encodes
- * through the width-matched physical codec (i64/i32/i16/i8).
+ * One task's writer: the partition's (sort-key-ordered) rows stream through
+ * the shared [[graft.jobs.BlockBuffer]] kernel, and each flushed block's
+ * column rows append to this task's own parquet file. The part's lineage
+ * rollup (rows, orig/enc bytes, per-column codecs) rides the commit message.
+ * The file is attempt-unique so speculative twins cannot collide. Serves the
+ * V2 batch and streaming writes and every task of [[EncodeJob.stageEncode]].
  */
 final class GraftDataWriter(absDir: String, partId: Int, partitionId: Int, taskId: Long,
     conf: org.apache.spark.util.SerializableConfiguration =
       new org.apache.spark.util.SerializableConfiguration(
         new org.apache.hadoop.conf.Configuration()),
-    schema: StructType = GraftDataSource.PageSchema)
+    schema: StructType = GraftDataSource.PageSchema,
+    maxBlockBytes: Long = EncodeJob.MaxBlockBytes)
     extends DataWriter[InternalRow] {
-  import graft.jobs.EncodeJob.{BlockSize, MaxBlockBytes}
 
   // attempt-unique name: partitionId for human mapping, taskId disambiguates
   // retries/speculation (the driver keeps only files named in commit messages)
@@ -549,48 +547,24 @@ final class GraftDataWriter(absDir: String, partId: Int, partitionId: Int, taskI
   private var writer: ParquetWriter[Group] = _
   private val factory = new SimpleGroupFactory(GraftDataWriter.BlockFileSchema)
 
-  // ---- schema-driven block buffers (mirrors EncodeJob.encodePartition) ----
-  private val fields = schema.fields
-  // per field: a byte-array buffer (string/binary) OR a long+valid buffer (ints)
-  private val strBufs = new Array[java.util.ArrayList[Array[Byte]]](fields.length)
-  private val textual = new Array[Boolean](fields.length)
-  private val longBufs = new Array[Array[Long]](fields.length)
-  private val validBufs = new Array[Array[Boolean]](fields.length)
-  private val intKind = new Array[graft.core.PhysicalIntType](fields.length)
-  fields.zipWithIndex.foreach { case (f, i) =>
-    f.dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        strBufs(i) = new java.util.ArrayList[Array[Byte]](BlockSize); textual(i) = true
-      case org.apache.spark.sql.types.BinaryType =>
-        strBufs(i) = new java.util.ArrayList[Array[Byte]](BlockSize)
-      case org.apache.spark.sql.types.TimestampType | org.apache.spark.sql.types.LongType =>
-        longBufs(i) = new Array[Long](BlockSize); validBufs(i) = new Array[Boolean](BlockSize)
-        intKind(i) = graft.core.PhysicalIntType.I64
-      case org.apache.spark.sql.types.IntegerType =>
-        longBufs(i) = new Array[Long](BlockSize); validBufs(i) = new Array[Boolean](BlockSize)
-        intKind(i) = graft.core.PhysicalIntType.I32
-      case org.apache.spark.sql.types.ShortType =>
-        longBufs(i) = new Array[Long](BlockSize); validBufs(i) = new Array[Boolean](BlockSize)
-        intKind(i) = graft.core.PhysicalIntType.I16
-      case org.apache.spark.sql.types.ByteType =>
-        longBufs(i) = new Array[Long](BlockSize); validBufs(i) = new Array[Boolean](BlockSize)
-        intKind(i) = graft.core.PhysicalIntType.I8
-      case other => throw new IllegalArgumentException(
-        s"unsupported graft column type ${f.name} ${other.simpleString}")
-    }
-  }
-  private var blockSeq = 0
-  private var n = 0
-  private var bufBytes = 0L
-
   // ---- per-part lineage rollup (computed in-task; no metrics job) ----
   private var rows = 0L
   private var origBytes = 0L
   private var encBytes = 0L
+  private var fileRecords = 0L
   private val codecsByColumn = scala.collection.mutable.Map.empty[String,
     scala.collection.mutable.TreeSet[String]]
 
-  @inline private def lenOf(b: Array[Byte]): Int = if (b == null) 0 else b.length
+  private val blocks = new BlockBuffer(schema, maxBlockBytes, { b =>
+    if (writer == null) openWriter()
+    writer.write(toGroup(b))
+    fileRecords += 1
+    origBytes += b.orig_bytes
+    encBytes += b.enc_bytes
+    codecsByColumn.getOrElseUpdate(b.column,
+      scala.collection.mutable.TreeSet.empty[String]) ++= b.codec.split('+')
+  })
+  blocks.startPart(partId)
 
   private def openWriter(): Unit = {
     val path = new Path(new Path(absDir), inProgressName)
@@ -598,15 +572,20 @@ final class GraftDataWriter(absDir: String, partId: Int, partitionId: Int, taskI
         org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(path, conf.value))
       .withType(GraftDataWriter.BlockFileSchema)
       // `encoded` dominates and is already codec-compressed high-entropy bytes;
-      // snappy over it costs CPU for ~0 size win (same choice as stageEncode)
+      // snappy over it costs CPU for ~0 size win
       .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
       // bound per-task memory: parquet buffers a whole row group in heap
-      // (uncompressed), and this writer already holds a MaxBlockBytes block
-      // buffer — the 128MB default × many concurrent tasks OOMs a default
-      // executor at web-page row sizes (measured at the 5M-page checkpoint).
-      // Smaller row groups also TIGHTEN read-side pruning: the part/seq
-      // In-filters skip at row-group granularity
-      .withRowGroupSize(32L << 20)
+      // (uncompressed), and this writer already holds a maxBlockBytes block
+      // buffer — parquet's 128MB default × many concurrent tasks OOMs a
+      // default executor at web-page row sizes (measured at the 5M-page
+      // checkpoint), so the default here is 32MB. Smaller row groups also
+      // TIGHTEN read-side pruning: the part/seq In-filters skip at row-group
+      // granularity
+      .withRowGroupSize(conf.value.getLong("parquet.block.size", 32L << 20))
+      // the row-group size is checked every 100..10000 records by default;
+      // honour the same keys Spark's parquet sink does
+      .withMinRowCountForPageSizeCheck(conf.value.getInt("parquet.page.size.row.check.min", 100))
+      .withMaxRowCountForPageSizeCheck(conf.value.getInt("parquet.page.size.row.check.max", 10000))
       .build()
   }
 
@@ -642,69 +621,24 @@ final class GraftDataWriter(absDir: String, partId: Int, partitionId: Int, taskI
     g
   }
 
-  private def flush(): Unit = {
-    if (n == 0) return
-    if (writer == null) openWriter()
-    var i = 0
-    while (i < fields.length) {
-      val b =
-        if (strBufs(i) != null)
-          EncodeJob.strBlockRow(partId, blockSeq, fields(i).name, strBufs(i), textual(i))
-        else
-          EncodeJob.intBlockRow(partId, blockSeq, fields(i).name,
-            longBufs(i), validBufs(i), n, intKind(i))
-      writer.write(toGroup(b))
-      origBytes += b.orig_bytes
-      encBytes += b.enc_bytes
-      codecsByColumn.getOrElseUpdate(b.column,
-        scala.collection.mutable.TreeSet.empty[String]) ++= b.codec.split('+')
-      if (strBufs(i) != null) strBufs(i).clear()
-      i += 1
-    }
-    rows += n
-    n = 0; bufBytes = 0L; blockSeq += 1
-  }
-
   override def write(row: InternalRow): Unit = {
-    var i = 0
-    while (i < fields.length) {
-      if (strBufs(i) != null) {
-        val v =
-          if (row.isNullAt(i)) null
-          else if (textual(i)) row.getUTF8String(i).getBytes
-          else row.getBinary(i)
-        strBufs(i).add(v)
-        bufBytes += lenOf(v)
-      } else {
-        if (row.isNullAt(i)) { longBufs(i)(n) = 0L; validBufs(i)(n) = false }
-        else {
-          longBufs(i)(n) = fields(i).dataType match {
-            case org.apache.spark.sql.types.IntegerType => row.getInt(i).toLong
-            case org.apache.spark.sql.types.ShortType => row.getShort(i).toLong
-            case org.apache.spark.sql.types.ByteType => row.getByte(i).toLong
-            case _ => row.getLong(i) // timestamp micros / bigint
-          }
-          validBufs(i)(n) = true
-        }
-        bufBytes += 8L
-      }
-      i += 1
-    }
-    n += 1
-    bufBytes += 8L
-    if (n == 50 && GraftDataWriter.failNextWriteOnce.compareAndSet(true, false)) {
-      flush() // leave a partial staged file so abort/cleanup is actually exercised
+    blocks.add(row)
+    rows += 1
+    if (blocks.buffered == 50 && GraftDataWriter.failNextWriteOnce.compareAndSet(true, false)) {
+      blocks.flush() // leave a partial staged file so abort/cleanup is actually exercised
       throw new RuntimeException("graft test hook: injected write failure")
     }
-    if (n == BlockSize || bufBytes >= MaxBlockBytes) flush()
   }
 
-  override def commit(): WriterCommitMessage = {
-    flush()
+  override def commit(): GraftWriterCommitMessage = {
+    blocks.flush()
     if (writer != null) { writer.close(); writer = null }
-    if (rows > 0) // task commit = atomic promote to the readable name
-      Files.move(Paths.get(absDir, inProgressName), Paths.get(absDir, fileName),
+    if (rows > 0) { // task commit = atomic promote to the readable name
+      val file = Files.move(Paths.get(absDir, inProgressName), Paths.get(absDir, fileName),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      Option(org.apache.spark.TaskContext.get()).foreach(
+        org.apache.spark.sql.graftshim.Shim.addOutput(_, Files.size(file), fileRecords))
+    }
     val codecsJson = codecsByColumn.toSeq.sortBy(_._1)
       .map { case (c, s) => s""""$c":"${s.mkString("+")}"""" }
       .mkString("{", ",", "}")

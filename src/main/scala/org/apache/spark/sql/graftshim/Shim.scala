@@ -27,6 +27,22 @@ object Shim {
   def translateFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.execution.datasources.DataSourceStrategy
       .translateFilter(e, supportNestedPredicatePushdown = false)
+  /** Task-side commit authorization (`private[spark]` OutputCommitCoordinator):
+    * the check DataWritingSparkTask makes before a V2 writer commits, so a
+    * zombie or speculative twin is denied instead of promoting its file. */
+  def authorizeCommit(tc: org.apache.spark.TaskContext): Unit =
+    if (!org.apache.spark.SparkEnv.get.outputCommitCoordinator.canCommit(
+        tc.stageId(), tc.stageAttemptNumber(), tc.partitionId(), tc.attemptNumber()))
+      throw new org.apache.spark.executor.CommitDeniedException(
+        s"commit denied for partition ${tc.partitionId()}", tc.stageId(), tc.partitionId(),
+        tc.attemptNumber())
+  /** Task output metrics (`private[spark]` setters): a writer that bypasses
+    * Spark's file sinks reports the bytes and records of the file it wrote. */
+  def addOutput(tc: org.apache.spark.TaskContext, bytes: Long, records: Long): Unit = {
+    val m = tc.taskMetrics().outputMetrics
+    m.setBytesWritten(m.bytesWritten + bytes)
+    m.setRecordsWritten(m.recordsWritten + records)
+  }
 }
 
 /** `private[sql]` analysis types re-exported for the graft expression layer. */

@@ -1,26 +1,49 @@
 package graft.core
 
-import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * End-to-end fixture round-trips matching the reference makefile schedule
- * (reference: makefile:69-136): encode each fixture under tests/ at its scheduled (type, k)
- * and (type, k, a), assert the encoded bytes' SHA-256 equals the reference CLI's
- * output (goldens recorded in /root/repo/FIXTURES.md), then decode and assert
- * byte-identity with the original file. Byte-equal encode ⇒ compressed size ≤
- * reference trivially (the BASELINE.json bound).
+ * (reference: makefile:69-136): encode each fixture input at its scheduled
+ * (type, k) and (type, k, a), assert the encoded bytes' SHA-256 equals the
+ * reference CLI's output (goldens recorded in FIXTURES.md §2), then decode and
+ * assert byte-identity with the original input. Byte-equal encode ⇒ compressed
+ * size ≤ reference trivially (the BASELINE.json bound).
+ *
+ * The eight inputs are the reference fixture files (tests/<type>.bin),
+ * rebuilt here from their exact definition (FIXTURES.md §1: type, count and
+ * value ranges in file order, little-endian), so the gate needs nothing
+ * outside this repository.
  */
 class FixtureSpec extends AnyFunSuite {
-
-  private val fixtureDir = "/root/reference/tests"
 
   private def sha256(bs: Array[Byte]): String =
     MessageDigest.getInstance("SHA-256").digest(bs).map(b => f"$b%02x").mkString
 
-  private def load(name: String): Array[Byte] =
-    Files.readAllBytes(Paths.get(s"$fixtureDir/$name.bin"))
+  /** Little-endian two's-complement bytes of `vs` at `width` bytes each. */
+  private def le(width: Int, vs: Seq[BigInt]): Array[Byte] =
+    vs.flatMap(v => (0 until width).map(i => ((v >> (8 * i)) & 0xff).toByte)).toArray
+
+  private def span(from: BigInt, to: BigInt): Seq[BigInt] =
+    Iterator.iterate(from)(_ + 1).takeWhile(_ <= to).toSeq
+
+  // FIXTURES.md §1, one row per file
+  private val inputs: Map[String, Array[Byte]] = {
+    val p = (e: Int) => BigInt(2).pow(e)
+    Map(
+      "u8" -> le(1, span(0, 255)),
+      "i8" -> le(1, span(-128, 127)),
+      "u16" -> le(2, span(0, 63) ++ span(65472, 65535)),
+      "i16" -> le(2, span(-32768, -32737) ++ span(-32, 31) ++ span(32736, 32767)),
+      "u32" -> le(4, span(0, 63) ++ span(p(32) - 64, p(32) - 1)),
+      "i32" -> le(4, span(-p(31), -p(31) + 31) ++ span(-32, 31) ++ span(p(31) - 32, p(31) - 1)),
+      "u64" -> le(8, span(0, 63) ++ span(p(64) - 64, p(64) - 1)),
+      "i64" -> le(8, span(-p(63) + 808, -p(63) + 839) ++ span(-32, 31) ++
+        span(p(63) - 840, p(63) - 809)))
+  }
+
+  private def load(name: String): Array[Byte] = inputs(name)
 
   // makefile:73-104 schedule + FIXTURES.md golden sizes/hashes
   private val nonAdaptive = Seq(

@@ -157,4 +157,25 @@ class R7OptimizationSpec extends AnyFunSuite {
       assert(dTotal == 100 && dBounds.isEmpty)
     } finally spark.stop()
   }
+
+  test("weightedBoundaries: a candidate heavier than one step yields one split, not a run") {
+    import graft.jobs.EncodeJob.weightedBoundaries
+    // uniform weights: the k-th split is where the running weight reaches k/parts
+    val uniform = (0 until 100).map(i => (f"u$i%03d", 1.0))
+    assert(weightedBoundaries(uniform, 100.0, 4).toSeq == Seq("u024", "u049", "u074"))
+    // one big input partition's lone sample among tiny ones: advancing the
+    // target once per split made every following candidate a split (m, z0, z1)
+    val lone = (0 until 10).map(i => (s"a$i", 1.0)) ++ Seq(("m", 1000.0)) ++
+      (0 until 10).map(i => (s"z$i", 1.0))
+    assert(weightedBoundaries(lone, 1020.0, 4).toSeq == Seq("m"))
+    // m covers quantiles 1 and 2; quantile 3 (757.5) still lands where the
+    // running weight reaches it, not on the candidate right after m
+    val tail = (0 until 10).map(i => (s"a$i", 1.0)) ++ Seq(("m", 500.0)) ++
+      (0 until 500).map(i => (f"z$i%03d", 1.0))
+    assert(weightedBoundaries(tail, 1010.0, 4).toSeq == Seq("m", "z247"))
+    // candidate order does not matter (selection sorts by url)
+    assert(weightedBoundaries(tail.reverse, 1010.0, 4).toSeq == Seq("m", "z247"))
+    assert(weightedBoundaries(uniform, 100.0, 1).isEmpty)
+    assert(weightedBoundaries(Seq.empty, 0.0, 8).isEmpty)
+  }
 }

@@ -281,6 +281,9 @@ class PipelineSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.files.openCostInBytes", "0")
     try {
       val split = DecodeJob.decode(spark, root)
+      val splitPlan = split.queryExecution.executedPlan.toString()
+      assert(splitPlan.contains("Exchange"),
+        s"the forced splits must cut some groups, so the fallback shuffle runs:\n$splitPlan")
       assert(split.count() == n, "straddling groups must be repaired, not dropped")
       assert(split.select("url").distinct().count() == n, "and not duplicated")
       assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8), split) == 0L)
@@ -481,7 +484,7 @@ class PipelineSpec extends AnyFunSuite {
   test("part-id expression stays in whole-stage codegen (no UDF in encode projection)") {
     import spark.implicits._
     val pages = Webtext.generate(spark, 1000, 4)
-    val b = EncodeJob.computeBoundaries(pages, 4)
+    val (_, _, b) = EncodeJob.countAndUrlBoundaries(pages.select($"url").as[String], _ => 4)
     val partIdCol = org.apache.spark.sql.graftshim.Shim.column(
       graft.functions.RangeBucketId(
         org.apache.spark.sql.graftshim.Shim.expression(col("url")), b, 0))
@@ -939,5 +942,113 @@ class PipelineSpec extends AnyFunSuite {
     assert(res.removedSnapshots == Seq(1L), s"re-run must finish the interrupted expiry: $res")
     assert(SnapshotStore.snapshotIds(root) == Seq(2L))
     assert(DecodeJob.decode(spark, root).count() == 400L, "current snapshot intact")
+  }
+
+  // ---- batch encode through the V2 block writer ----
+
+  /** Readable (not dot-prefixed) files anywhere under the store's data dirs. */
+  private def readableDataFiles(root: String): Seq[java.nio.file.Path] = {
+    val data = java.nio.file.Paths.get(root, "data")
+    if (!Files.exists(data)) Seq.empty
+    else {
+      val walk = Files.walk(data)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+          !p.getFileName.toString.startsWith(".")).toSeq
+      } finally walk.close()
+    }
+  }
+
+  test("batch encode writes exactly one block file per part, holding only that part") {
+    val root = freshRoot()
+    EncodeJob.run(spark, Webtext.generate(spark, 8000L, 8), root, parts = 8)
+    val files = readableDataFiles(root)
+    assert(files.size == 8, s"one file per part: $files")
+    val idsPerFile = files.map(f => spark.read.parquet(f.toString).select("part_id")
+      .distinct().collect().map(_.getInt(0)).toSeq)
+    assert(idsPerFile.forall(_.size == 1), s"a file holds one part_id: $idsPerFile")
+    assert(idsPerFile.flatten.sorted == (0 until 8))
+  }
+
+  test("manifest lineage equals a rollup over the block files") {
+    import spark.implicits._
+    val root = freshRoot()
+    // small blocks: every part spans several blocks, so the in-task rollup
+    // must sum across them
+    EncodeJob.run(spark, Webtext.generate(spark, 6000L, 8), root, parts = 8, waves = 2,
+      maxBlockBytes = 256 * 1024)
+    val blocks = DecodeJob.blocks(spark, root)
+    assert(blocks.select("part_id", "block_seq").distinct().count() > 16)
+    val rollup = blocks.groupBy($"part_id").agg(
+      sum(when($"column" === "url", $"n").otherwise(0)),
+      sum($"orig_bytes"), sum($"enc_bytes"))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    val entries = SnapshotStore.currentEntries(root)
+    assert(entries.map(e => e.partId -> ((e.nRows, e.origBytes, e.encBytes))).toMap == rollup)
+    // every block's codec is listed under its column in its part's codec map
+    val codecs = entries.map(e => e.partId -> e.codecsJson).toMap
+    blocks.select($"part_id", $"column", $"codec").distinct().collect().foreach { r =>
+      val listed = ("\"" + r.getString(1) + "\":\"([^\"]*)\"").r
+        .findFirstMatchIn(codecs(r.getInt(0))).map(_.group(1).split('+').toSet)
+        .getOrElse(Set.empty)
+      assert(r.getString(2).split('+').forall(listed), s"$r not in ${codecs(r.getInt(0))}")
+    }
+  }
+
+  test("resume with only a middle part committed encodes every row exactly once") {
+    val n = 8000L
+    val pages = Webtext.generate(spark, n, 8)
+    val root = freshRoot()
+    // fix the store's range layout, then commit part 3 alone
+    val bounds = EncodeJob.loadOrCreateBoundaries(root, pages, 8)
+    assert(bounds.length == 7)
+    EncodeJob.run(spark, pages.filter(p => EncodeJob.partIdFor(p.url, bounds) == 3), root,
+      parts = 8)
+    assert(SnapshotStore.committedPartIds(root) == Set(3))
+    // the first wave's id range [0, 4] spans the committed part: its empty
+    // partition must stage nothing
+    val resumed = EncodeJob.run(spark, pages, root, parts = 8, waves = 2)
+    assert(resumed.partsEncoded == 7)
+    assert(SnapshotStore.committedPartIds(root) == (0 until 8).toSet)
+    val decoded = DecodeJob.decode(spark, root)
+    assert(decoded.count() == n)
+    assert(decoded.select("url").distinct().count() == n)
+    assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8), decoded) == 0L)
+  }
+
+  test("a failed encode task commits nothing and leaves no readable file; a re-run succeeds") {
+    val root = freshRoot()
+    val n = 4000L
+    graft.sources.v2.GraftDataWriter.failNextWriteOnce.set(true)
+    val e =
+      try intercept[Exception](EncodeJob.run(spark, Webtext.generate(spark, n, 8), root, parts = 8))
+      finally graft.sources.v2.GraftDataWriter.failNextWriteOnce.set(false)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected")), e)
+    assert(SnapshotStore.currentSnapshotId(root).isEmpty, "nothing committed")
+    assert(readableDataFiles(root).isEmpty, s"stray files: ${readableDataFiles(root)}")
+    val res = EncodeJob.run(spark, Webtext.generate(spark, n, 8), root, parts = 8)
+    assert(res.nRows == n)
+    assert(DecodeJob.verifyAgainst(Webtext.generate(spark, n, 8),
+      DecodeJob.decode(spark, root)) == 0L)
+  }
+
+  test("a delete that matches every row commits an empty part set") {
+    val root = freshRoot()
+    EncodeJob.run(spark, Webtext.generate(spark, 2000L, 4), root, parts = 4)
+    def dataDirs(): Set[String] = {
+      val ls = Files.list(java.nio.file.Paths.get(root, "data"))
+      try ls.toArray.map(_.toString).toSet finally ls.close()
+    }
+    val dirsBefore = dataDirs()
+    val res = DeleteJob.deleteWhere(spark, root, lit(true), Seq.empty)
+    assert(res.partsRewritten == 4 && res.partsCreated == 0, res)
+    assert(res.rowsBefore == 2000L && res.rowsAfter == 0L, res)
+    assert(SnapshotStore.currentEntries(root).isEmpty)
+    assert(SnapshotStore.currentTombstones(root) == (0 until 4).toSet)
+    assert(dataDirs() == dirsBefore, "the all-deleted rewrite must leave no staging dir")
+    // copy-on-write: the pre-delete snapshot still reads every row
+    assert(DecodeJob.decodeAt(spark, root, SnapshotStore.snapshotIds(root).head).count() == 2000L)
   }
 }
